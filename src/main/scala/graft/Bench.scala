@@ -4,12 +4,26 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): times every SparkEntry query at the
   * SPARK_GRAFT_SF_DIR scale factor and prints ONE JSON line. */
 object Bench {
+  /** Timed runs per query, from SPARK_GRAFT_BENCH_REPS (default 3): the
+    * median discards one machine-load outlier per side while staying
+    * cheap; 1 restores single-shot for the (slow) full-inventory sweep.
+    * Below 1 there is no median, so it fails before any Spark work. */
+  private[graft] def reps(raw: Option[String]): Int = {
+    val n = raw.getOrElse("3").toInt
+    require(n >= 1, s"usage: SPARK_GRAFT_BENCH_REPS must be >= 1, got $n")
+    n
+  }
+
+  /** Local task threads of the mains (Bench, Verify, StageProbe,
+    * ScaleUp): the machine's cores capped at 32 (the target is
+    * local[32]-class hardware); SPARK_GRAFT_CPUS pins it for reproducible
+    * small runs. */
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.min(32, Runtime.getRuntime.availableProcessors).toString)
+
   def main(args: Array[String]): Unit = {
+    val reps = Bench.reps(sys.env.get("SPARK_GRAFT_BENCH_REPS"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine (the target is local[32]-class hardware);
-    // SPARK_GRAFT_CPUS pins it for reproducible small runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
     // realistic-exchange posture (BENCH_SCALE control runs): a cluster plan
     // pays per-partition fixed costs the local cpus-partition default
     // hides — SPARK_GRAFT_SHUFFLE_PARTITIONS=200 SPARK_GRAFT_AQE=1 times
@@ -81,13 +95,6 @@ object Bench {
       case Some(only) => only.split(",").toSeq.filter(SparkEntry.queries.contains)
       case None => names0
     }
-    // median of `reps` timed runs per query (default 3): a single run is
-    // hostage to machine-load noise — the r04 driver recording doubled two
-    // queries that the builder's run minutes earlier timed at half, purely
-    // from co-tenant load. The median discards one bad draw per side while
-    // staying cheap; SPARK_GRAFT_BENCH_REPS=1 restores single-shot for the
-    // (slow) full-inventory sweep.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // carried ACROSS queries, not per-query: a heavy query's final rep
     // leaves its shuffle garbage behind just like an intermediate rep
     // does, and the next query's first timed rep would otherwise pay for

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 /** Plan-shape audit over the whole query inventory: per query, the counts
   * that matter at 100× scale — shuffle exchanges, broadcasts, nested-loop /
   * cartesian joins, window operators — plus the custom-operator markers.
-  * Run with a query-name substring to dump those plans in full.
+  * Run with a query-name substring to dump those plans in full
+  * (`explain("formatted")`).
   *
   * This is a dev tool (the CI-shaped assertions live in PlanSpec); it exists
   * to eyeball NEW queries for accidental shuffles before they ship.
@@ -54,7 +55,7 @@ object PlanAudit {
           p.children.foreach(walk)
         }
         walk(executed)
-        if (filter.isDefined) println(s"=== $name ===\n$plan\n")
+        if (filter.isDefined) { println(s"=== $name ==="); df.explain("formatted") }
         else {
           def c(m: String) = plan.linesIterator.count(_.contains(m))
           val flags = Seq(

@@ -45,8 +45,7 @@ object ScaleUp {
     val saltKeys = args.length == 4
     val (src, out, copies) = (args(0), args(1), args(2).toInt)
     require(copies >= 1, s"copies must be >= 1, got $copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val cpus = Bench.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

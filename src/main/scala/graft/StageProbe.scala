@@ -78,10 +78,11 @@ object StageProbe {
     require(args.nonEmpty, "usage: StageProbe <queryName>")
     val name = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = Bench.cpus
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
+      .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
       // same knob Bench honors: a single-file replica reads as ONE split
       // until 128 MB, so scan-side stages serialize as a harness artifact;
       // pinning e.g. 4m is the cluster-shaped posture that separates that

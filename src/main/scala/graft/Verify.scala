@@ -312,10 +312,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // default to the machine (the target is local[32]-class hardware);
-    // SPARK_GRAFT_CPUS pins it for reproducible small runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val cpus = Bench.cpus
     // exchange-posture knobs (same contract as Bench): the invariance sweep
     // re-runs the whole surface under shuffle.partitions=200 + AQE and
     // hash-compares against the oracle — results must not depend on

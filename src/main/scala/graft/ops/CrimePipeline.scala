@@ -92,24 +92,11 @@ object CrimePipeline {
       .select((col("id1") - 1).as("idx"), col("name"))
 
   /** A3 / `SanFranciscoCrimePrepOlap`: sparse daily (catIdx, distIdx, count)
-    * triplets keyed by normalized `yyyy/MM/dd` date string, ids joined from
-    * the dictionaries (broadcast — the reference's static-HashMap side input
-    * made cluster-safe). */
-  def dailyTriplets(crime: DataFrame): DataFrame = {
-    val cats = dictionary0(crime, "Category")
-      .withColumnRenamed("idx", "cat_idx").withColumnRenamed("name", "Category")
-    val dists = dictionary0(crime, "PdDistrict")
-      .withColumnRenamed("idx", "dist_idx").withColumnRenamed("name", "PdDistrict")
-    crime
-      .groupBy(
-        date_format(col("incident_date"), "yyyy/MM/dd").as("d"),
-        col("Category"), col("PdDistrict"))
-      .agg(count(lit(1)).as("n"))
-      .join(broadcast(cats), "Category")
-      .join(broadcast(dists), "PdDistrict")
-      .select(col("d"), col("cat_idx"), col("dist_idx"), col("n"))
-      .orderBy("d", "cat_idx", "dist_idx")
-  }
+    * triplets keyed by normalized `yyyy/MM/dd` date string, ids from the
+    * [[dictionary0]] id space ([[Parity.indexedDailyCube]]). */
+  def dailyTriplets(crime: DataFrame): DataFrame =
+    Parity.indexedDailyCube(crime.select(col("incident_date").as("d"),
+      col("Category").as("category"), col("PdDistrict").as("district")))
 
   /** S4: the reference's TSV sink shape — `key TAB v1,v2,...` text rows. */
   def toTsv(df: DataFrame, keyColumn: String): DataFrame = {

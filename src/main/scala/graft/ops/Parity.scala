@@ -79,84 +79,29 @@ object Parity {
   def categoryTotals(events: DataFrame): DataFrame =
     events.groupBy("event_type").agg(count(lit(1)).as("n")).orderBy("event_type")
 
-  /** A6 (`DataFile.extractKeys` + `LoadStarDB.setup`): distinct values of a
-    * column, sorted, with 1-based dense ids = sorted rank. The reference
-    * assigns dictionary ids by sorted insertion order; a sorted single-pass
-    * index reproduces that deterministically.
+  /** A6 (`DataFile.extractKeys` + `LoadStarDB.setup`): distinct non-null
+    * values of a column, sorted, with 1-based dense ids = sorted rank. The
+    * reference assigns dictionary ids by sorted insertion order; a sorted
+    * single-partition pass reproduces that deterministically.
     *
-    * Scale note: the id pass is single-partition by design — valid only for
-    * dimension-cardinality inputs (10-40 values here; the distinct() shuffle
-    * reduces to that before the index pass sees it). It was previously a
-    * global `row_number` window, which computes the same thing but logs
-    * Spark's single-partition-window performance warning on every run; the
-    * explicit sort + stateful scan is the same one-task work without
-    * pretending to be a general window. A 100 TB-scale dictionary over a
-    * high-cardinality key should switch to hash ids or [[Rank.groupRanks]]
-    * instead; this operator intentionally matches the reference's
-    * sorted-rank contract.
+    * The id pass is one task by design: every dictionary here is a
+    * dimension table (5-40 names, ~2.4k dates), and the distinct() shuffle
+    * shrinks the input to that before the merge. `coalesce`, not
+    * `repartition`: a narrow merge into the id task, no extra exchange. In
+    * that one partition `monotonically_increasing_id` counts 0, 1, 2, ...
+    * in sorted order, so the id is codegen arithmetic, and being
+    * nondeterministic it also keeps the optimizer from dropping the sort.
+    * No trailing orderBy: callers that expose a dictionary sort at the
+    * output boundary; broadcast-join callers need no order. A
+    * high-cardinality key wants [[Rank.groupRanks]] or hash ids instead.
     */
-  def dictionary(df: DataFrame, column: String, idName: String, nameName: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val distinctVals = df.select(col(column).as(nameName))
+  def dictionary(df: DataFrame, column: String, idName: String, nameName: String): DataFrame =
+    df.select(col(column).as(nameName))
       .where(col(nameName).isNotNull)
       .distinct()
-    val outSchema = StructType(
-      StructField(idName, IntegerType, nullable = false) +: distinctVals.schema.fields)
-    // coalesce, not repartition: a narrow merge of the distinct's output
-    // partitions into the one id-assignment task — no extra exchange round
-    // (measured ~0.2 s per dictionary in stage overhead). No trailing
-    // orderBy either: the single output partition is emitted already
-    // sorted; query-boundary callers that EXPOSE a dictionary add their own
-    // explicit sort (driver rule: total ORDER BY at the output boundary),
-    // while plan-internal callers (broadcast dim joins) would pay a range
-    // exchange for nothing.
-    distinctVals
       .coalesce(1)
       .sortWithinPartitions(col(nameName))
-      .mapPartitions { it =>
-        var i = 0
-        it.map { row => i += 1; Row.fromSeq(i +: row.toSeq) }
-      }(Encoders.row(outSchema))
-  }
-
-  /** [[dictionary]] for UNBOUNDED-cardinality columns: same (id, name)
-    * contract (dense 1-based ids in sorted order), but the rank comes from
-    * [[Rank.groupRanks]]' distributed prefix sum — range-partitioned, no
-    * single-task id assignment anywhere. Use when the dictionary column is
-    * not a bounded dimension (user ids, URLs, doc fingerprints at corpus
-    * scale); the default stays `coalesce(1)` because for true dims the
-    * merge task is cheaper than an extra range exchange (measured ~0.2 s
-    * per dictionary). Row-identical to [[dictionary]] (spec-asserted). */
-  def dictionaryScalable(df: DataFrame, column: String, idName: String,
-      nameName: String): DataFrame =
-    Rank.groupRanks(
-        df.select(col(column).as(nameName))
-          .where(col(nameName).isNotNull)
-          .distinct(),
-        Seq.empty, Seq(col(nameName)))
-      .select(col("rank").cast("int").as(idName), col(nameName))
-
-  /** Session conf key selecting the dictionary build for operators that
-    * don't pin one: `true` (the default) → [[dictionaryScalable]]'s
-    * distributed rank, `false` → [[dictionary]]'s one-task merge. */
-  val ScalableDictionariesConf = "spark.graft.scalableDictionaries"
-
-  /** [[dictionary]] / [[dictionaryScalable]] dispatch: an explicit
-    * `scalable` wins; otherwise [[ScalableDictionariesConf]] decides
-    * (default TRUE — the exposed dictionary builds should run the path
-    * that survives a high-cardinality column, and for bounded dims the
-    * extra range exchange costs ~0.2 s, not correctness). Both paths are
-    * row-identical (spec-asserted and both oracled); plan-internal callers
-    * that broadcast a provably tiny dim pin `Some(false)` for the cheaper
-    * merge task. */
-  def dictionaryAuto(df: DataFrame, column: String, idName: String,
-      nameName: String, scalable: Option[Boolean] = None): DataFrame = {
-    val useScalable = scalable.getOrElse(
-      df.sparkSession.conf.get(ScalableDictionariesConf, "true").toBoolean)
-    if (useScalable) dictionaryScalable(df, column, idName, nameName)
-    else dictionary(df, column, idName, nameName)
-  }
+      .select((monotonically_increasing_id() + 1).cast("int").as(idName), col(nameName))
 
   /** P5 (`MapReduceJobBase.getKeyDate`/`formatKey`): normalize a timestamp to
     * the reference's `yyyy/MM/dd` sort-stable string key. */
@@ -165,33 +110,33 @@ object Parity {
       .select(col("event_id"), date_format(col("ts"), "yyyy/MM/dd").as("d"))
       .orderBy("event_id")
 
-  /** A3 + A6 composed: the OLAP-prep job's full output — daily counts keyed by
-    * dictionary ids rather than names (SanFranciscoCrimePrepOlap.java:161-205).
-    * The reference probes driver-local static HashMaps (single-JVM-only);
-    * here the dictionaries are tiny DataFrames broadcast-joined in, which is
-    * the same hash probe but correct on a real cluster.
+  /** A3 + A6 composed (`SanFranciscoCrimePrepOlap.java:155-225`): the
+    * OLAP-prep job's output, daily counts keyed by 0-based dictionary ids
+    * instead of names. Input `(d: date, category, district)`; output
+    * `(d "yyyy/MM/dd", cat_idx int, dist_idx int, n bigint)`, sorted.
+    *
+    * The reference probes driver-local static HashMaps (single-JVM only);
+    * here the dictionaries are broadcast joins, the same hash probe but
+    * correct on a cluster. They come from pruned one-column scans of the
+    * input, NOT from the aggregate: each dictionary branch would prune the
+    * aggregate differently, so Spark could not reuse one exchange and the
+    * whole scan+shuffle would run three times (measured +0.7 s at sf0.1).
     */
-  def dailyCubeIndexed(events: DataFrame): DataFrame = {
-    val cube = dailyCube(events)
-    // dictionaries from their own single-column scans, NOT from the cube:
-    // deriving them from the aggregate looks cheaper (no second scan) but
-    // each dictionary branch prunes the aggregate differently, so Spark
-    // cannot reuse one exchange across the three branches and the whole
-    // scan+shuffle runs three times (measured +0.7 s on this query at
-    // sf0.1). A one-column pruned scan + distinct is the cheap path in any
-    // columnar format — it reads only that column's bytes.
-    val catDict = dictionary(events, "event_type", "category_id", "event_type")
-    val distDict = dictionary(
-      events.select(districtOf(col("user_id")).as("district")), "district",
-      "district_id", "district")
-    cube
-      .join(broadcast(catDict), "event_type")
-      .join(broadcast(distDict), "district")
+  def indexedDailyCube(cells: DataFrame): DataFrame =
+    cells.groupBy("d", "category", "district")
+      .agg(count(lit(1)).as("n"))
+      .join(broadcast(dictionary(cells, "category", "cat_id", "category")), "category")
+      .join(broadcast(dictionary(cells, "district", "dist_id", "district")), "district")
       .select(
         date_format(col("d"), "yyyy/MM/dd").as("d"),
-        (col("category_id") - 1).as("cat_idx"),
-        (col("district_id") - 1).as("dist_idx"),
+        (col("cat_id") - 1).as("cat_idx"),
+        (col("dist_id") - 1).as("dist_idx"),
         col("n"))
       .orderBy("d", "cat_idx", "dist_idx")
-  }
+
+  /** [[indexedDailyCube]] over events: `event_type` is the category,
+    * [[districtOf]] the district. */
+  def dailyCubeIndexed(events: DataFrame): DataFrame =
+    indexedDailyCube(events.select(to_date(col("ts")).as("d"),
+      col("event_type").as("category"), districtOf(col("user_id")).as("district")))
 }

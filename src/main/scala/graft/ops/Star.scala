@@ -28,35 +28,27 @@ object Star {
       .join(broadcast(nation.select("n_nationkey", "n_name")),
         col("c_nationkey") === col("n_nationkey"))
 
-  /** Category dimension: 1-based sorted-rank ids (LoadStarDB.java:186-195).
-    * Dictionary build dispatches on [[Parity.ScalableDictionariesConf]]
-    * (default: the distributed-rank path — no one-task merge in the plan);
-    * pass `scalable = Some(false)` to pin the bounded-dim merge. */
-  def dimCategory(orders: DataFrame,
-      scalable: Option[Boolean] = None): DataFrame =
-    Parity.dictionaryAuto(orders, "o_orderpriority", "category_id", "name",
-      scalable)
+  /** Category dimension: 1-based sorted-rank ids (LoadStarDB.java:186-195). */
+  def dimCategory(orders: DataFrame): DataFrame =
+    Parity.dictionary(orders, "o_orderpriority", "category_id", "name")
 
   /** District dimension over nation names. */
-  def dimDistrict(nation: DataFrame,
-      scalable: Option[Boolean] = None): DataFrame =
-    Parity.dictionaryAuto(nation, "n_name", "district_id", "name", scalable)
+  def dimDistrict(nation: DataFrame): DataFrame =
+    Parity.dictionary(nation, "n_name", "district_id", "name")
 
   /** Time dimension: distinct order dates decomposed to
     * (year, month, week-of-month, day) — the `timeperiod` table
     * (starschema.sql:2-6). The reference assigns `time_id` by first-seen file
-    * order (nondeterministic); here it is `row_number` over the date order —
+    * order (nondeterministic); here it is the sorted rank of the date —
     * deterministic, documented delta (SURVEY.md §3.3). Months are 1-based
     * (documented delta from the reference's raw Calendar.MONTH persistence).
     */
-  def dimTime(orders: DataFrame, scalable: Option[Boolean] = None): DataFrame = {
+  def dimTime(orders: DataFrame): DataFrame = {
     // native codegen week_of_month (graft.plans.WeekOfMonth) — proven equal
     // to the column formula in ExpressionsSpec, and this keeps the custom
     // expression on the oracle-gated path
     graft.plans.GraftExtensions.ensureRegistered(orders.sparkSession)
-    Parity.dictionaryAuto(
-        orders.select(to_date(col("o_orderdate")).as("d")), "d", "time_id", "d",
-        scalable)
+    Parity.dictionary(orders.select(to_date(col("o_orderdate")).as("d")), "d", "time_id", "d")
       .select(
         col("time_id"), col("d"),
         year(col("d")).as("year"),
@@ -96,12 +88,8 @@ object Star {
         col("o_orderpriority").as("category"),
         col("n_name").as("district"))
     val agg = src.groupBy("d", "category", "district").agg(count(lit(1)).as("crimes"))
-    // plan-internal broadcast dims pinned to the one-task merge: these are
-    // bounded by construction (5 priorities / 25 nations / ~2.4k dates) and
-    // the distributed-rank path would add a range exchange + offset pass
-    // per dictionary for the same 5-row broadcast
-    val catDict = dimCategory(orders, scalable = Some(false))
-    val distDict = dimDistrict(nation, scalable = Some(false))
+    val catDict = dimCategory(orders)
+    val distDict = dimDistrict(nation)
     val timeDict = Parity.dictionary(
       orders.select(to_date(col("o_orderdate")).as("d")), "d", "time_id", "td")
     val withIds = agg
@@ -119,9 +107,9 @@ object Star {
     *
     * The year predicate is applied to the fact SOURCE by hand: Catalyst
     * cannot push a filter on `dimTime.year` back through the fact build
-    * (the row_number window is a pushdown barrier), so filtering `orders`
-    * first is the manual equivalent — the aggregate then sees only the
-    * slice (7× less input on TESTDATA's seven-year span).
+    * (the nondeterministic id pass is a pushdown barrier), so filtering
+    * `orders` first is the manual equivalent — the aggregate then sees only
+    * the slice (7× less input on TESTDATA's seven-year span).
     *
     * Aggregate-first: the fact source collapses straight to |categories|
     * rows, then the (broadcast, 5-row) dimension resolves the canonical dim
@@ -132,7 +120,7 @@ object Star {
   def sumByCategory(orders: DataFrame, customer: DataFrame, nation: DataFrame,
       yearSlice: Int): DataFrame = {
     val ordersY = orders.where(Relational.inYear(col("o_orderdate"), yearSlice))
-    val catDict = dimCategory(ordersY, scalable = Some(false)) // 5-row broadcast dim
+    val catDict = dimCategory(ordersY) // 5-row broadcast dim
     ordersY.select(col("o_orderpriority").as("name"))
       .groupBy("name")
       .agg(count(lit(1)).as("crimes"))
@@ -147,7 +135,7 @@ object Star {
   def sumByDistrict(orders: DataFrame, customer: DataFrame, nation: DataFrame,
       yearSlice: Int): DataFrame = {
     val ordersY = orders.where(Relational.inYear(col("o_orderdate"), yearSlice))
-    val distDict = dimDistrict(nation, scalable = Some(false)) // 25-row broadcast dim
+    val distDict = dimDistrict(nation) // 25-row broadcast dim
     ordersWithDistrict(ordersY, customer, nation)
       .select(col("n_name").as("name"))
       .groupBy("name")

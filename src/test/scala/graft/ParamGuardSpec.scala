@@ -26,6 +26,13 @@ class ParamGuardSpec extends AnyFunSuite {
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
       .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
 
+  test("Bench rejects SPARK_GRAFT_BENCH_REPS below 1 before any Spark work") {
+    assert(Bench.reps(None) == 3 && Bench.reps(Some("1")) == 1)
+    for (bad <- Seq("0", "-2"))
+      assert(intercept[IllegalArgumentException](Bench.reps(Some(bad)))
+        .getMessage.contains("SPARK_GRAFT_BENCH_REPS must be >= 1"))
+  }
+
   test("lshTopK rejects bits/tables/dim outside the meaningful range") {
     val e = emb4(8)
     // bits = 0 used to die in srpBucket's empty.reduce; bits >= 64 would

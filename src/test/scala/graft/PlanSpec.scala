@@ -338,27 +338,6 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("star dims: default dictionary path is distributed (no one-task merge)") {
-    val orders = Tables.orders(spark, TestSpark.sf0001)
-    val nation = Tables.nation(spark, TestSpark.sf0001)
-    // conf default (scalableDictionaries=true): no Coalesce(1) anywhere —
-    // the id assignment is the range-partitioned rank, and the two paths
-    // are proven row-identical here and by the shared oracle SQL
-    for (df <- Seq(Star.dimCategory(orders), Star.dimDistrict(nation),
-        Star.dimTime(orders))) {
-      val p = plan(df)
-      // the one-task merge plans as the physical node "Coalesce 1" (the
-      // lowercase coalesce() EXPRESSION and AQE's "coalesced" reads are
-      // different things and allowed)
-      assert(!p.contains("Coalesce 1"),
-        s"default dim build must not funnel into one task:\n$p")
-    }
-    val defaultRows = Star.dimCategory(orders).orderBy("category_id").collect()
-    val onetaskRows = Star.dimCategory(orders, scalable = Some(false))
-      .orderBy("category_id").collect()
-    assert(defaultRows.map(_.toSeq).toSeq == onetaskRows.map(_.toSeq).toSeq)
-  }
-
   test("full inventory: no unbounded single-partition window, no cartesian product") {
     // The one plan shape that silently stops scaling: a WindowExec with an
     // empty partitionSpec serializes its whole input through ONE task. The
